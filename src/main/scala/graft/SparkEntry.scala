@@ -17,44 +17,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q04_revenue_by_nation")(spark, "/root/testdata/sf0.001")
 
+  /** Every registered module, each listed once. */
+  private def modules: Seq[QueryModule] = Seq(
+    graft.queries.Core, graft.queries.Flights, graft.queries.StarQueries,
+    graft.queries.Stats, graft.ops.TextAnalysis, graft.ops.EventTime,
+    graft.ops.Similarity, graft.ops.Dedup, graft.ops.Multimodal,
+    graft.ops.Curation, graft.ops.Assembly, graft.ops.Bpe,
+    graft.ops.Boilerplate, graft.ops.Layout, graft.ops.BloomJoin,
+    graft.ops.Scd, graft.ops.Expectations, graft.ops.Graphs,
+    graft.ops.RangeJoin, graft.queries.Cohorts, graft.queries.Drift,
+    graft.ops.PartitionedFacts, graft.ops.Bucketing, graft.ops.Cdc,
+    graft.ops.Privacy, graft.ops.MatView, graft.ops.PostingsIndex)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Core.queries ++ graft.queries.Flights.queries ++
-      graft.queries.StarQueries.queries ++ graft.queries.Stats.queries ++
-      graft.ops.TextAnalysis.queries ++ graft.ops.EventTime.queries ++
-      graft.ops.Similarity.queries ++ graft.ops.Dedup.queries ++
-      graft.ops.Multimodal.queries ++ graft.ops.Curation.queries ++
-      graft.ops.Assembly.queries ++ graft.ops.Bpe.queries ++
-      graft.ops.Boilerplate.queries ++ graft.ops.Layout.queries ++
-      graft.ops.BloomJoin.queries ++ graft.ops.Scd.queries ++
-      graft.ops.Expectations.queries ++ graft.ops.Graphs.queries ++
-      graft.ops.RangeJoin.queries ++ graft.queries.Cohorts.queries ++
-      graft.queries.Drift.queries ++ graft.ops.PartitionedFacts.queries ++
-      graft.ops.Bucketing.queries ++ graft.ops.Cdc.queries ++
-      graft.ops.Privacy.queries ++ graft.ops.MatView.queries ++
-      graft.ops.PostingsIndex.queries
+    modules.foldLeft(Map.empty[String, (SparkSession, String) => DataFrame])(_ ++ _.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    graft.queries.Core.oracle ++ graft.queries.Flights.oracle ++
-      graft.queries.StarQueries.oracle ++ graft.queries.Stats.oracle ++
-      graft.ops.TextAnalysis.oracle ++ graft.ops.EventTime.oracle ++
-      graft.ops.Similarity.oracle ++ graft.ops.Dedup.oracle ++
-      graft.ops.Multimodal.oracle ++ graft.ops.Curation.oracle ++
-      graft.ops.Assembly.oracle ++ graft.ops.Bpe.oracle ++
-      graft.ops.Boilerplate.oracle ++ graft.ops.Layout.oracle ++
-      graft.ops.BloomJoin.oracle ++ graft.ops.Scd.oracle ++
-      graft.ops.Expectations.oracle ++ graft.ops.Graphs.oracle ++
-      graft.ops.RangeJoin.oracle ++ graft.queries.Cohorts.oracle ++
-      graft.queries.Drift.oracle ++ graft.ops.PartitionedFacts.oracle ++
-      graft.ops.Bucketing.oracle ++ graft.ops.Cdc.oracle ++
-      graft.ops.Privacy.oracle ++ graft.ops.MatView.oracle ++
-      graft.ops.PostingsIndex.oracle
+    modules.foldLeft(Map.empty[String, String])(_ ++ _.oracle)
 
   /** Queries driven by checked-in fixtures rather than the sf-scaled
     * testdata tables: their runtime is constant in SF, so Bench reports
     * them separately from the sf-scaled headline total. */
   def constQueries: Set[String] =
-    graft.queries.Flights.queries.keySet ++ graft.queries.StarQueries.queries.keySet
+    modules.filter(_.fixtureDriven).flatMap(_.queries.keySet).toSet
 }

@@ -25,9 +25,13 @@ import org.apache.spark.sql.functions._
   *         ledger append
   *  - I-9  offset state write
   *
-  * The designed-for-scale path is [[graft.streaming.StreamingIngest]]
-  * (file-source checkpointing subsumes this offset machinery); this
-  * class exists for exact reference parity and single-file use.
+  * There is ONE commit protocol (see [[ingest]]): the single-file API
+  * runs it under the reference's singleton state, and
+  * [[ingestDirectory]] runs it once per file under that file's own
+  * state key. The designed-for-scale path is
+  * [[graft.streaming.StreamingIngest]] (file-source checkpointing
+  * subsumes this offset machinery); this class exists for exact
+  * reference parity and for files that grow in place.
   */
 class FlightIngest(spark: SparkSession, root: String) {
   import FlightIngest._
@@ -35,26 +39,27 @@ class FlightIngest(spark: SparkSession, root: String) {
   def stagingPath: String = s"$root/staging"
   def ledgerPath: String  = s"$root/ledger"
 
-  /** Per-FILE state key for the directory form ([[ingestDirectory]]):
-    * the single-file API keeps the reference's singleton state paths
-    * (None), the directory form keys offset + marker by file name so
-    * each file carries its own independent resume contract. Set only
-    * inside ingestDirectory's per-file loop (single-writer, like the
-    * offset state itself). */
-  private var stateKey: Option[String] = None
-  private def keySuffix = stateKey.map("__" + _).getOrElse("")
-  private def statePath   = Paths.get(s"$root/state/flight_csv_offset$keySuffix")
-  private def inflightPath = Paths.get(s"$root/state/flight_inflight$keySuffix")
+  /** State files of one resume contract. `key` is None for the
+    * single-file API (the reference's singleton state paths) and
+    * `Some(fileKey(name))` under [[ingestDirectory]], so each file
+    * carries its own independent offset and intent marker. */
+  private def keySuffix(key: Option[String]) = key.map("__" + _).getOrElse("")
+  private def statePath(key: Option[String]) =
+    Paths.get(s"$root/state/flight_csv_offset${keySuffix(key)}")
+  private def inflightPath(key: Option[String]) =
+    Paths.get(s"$root/state/flight_inflight${keySuffix(key)}")
 
   /** I-2: Airflow `Variable.get("flight_csv_offset", 0)` equivalent. */
-  def offset: Long =
-    if (Files.exists(statePath))
-      new String(Files.readAllBytes(statePath), StandardCharsets.UTF_8).trim.toLong
+  def offset: Long = readOffset(None)
+
+  private def readOffset(key: Option[String]): Long =
+    if (Files.exists(statePath(key)))
+      new String(Files.readAllBytes(statePath(key)), StandardCharsets.UTF_8).trim.toLong
     else 0L
 
-  private def writeOffset(v: Long): Unit = {
-    Files.createDirectories(statePath.getParent)
-    Files.write(statePath, v.toString.getBytes(StandardCharsets.UTF_8))
+  private def writeOffset(key: Option[String], v: Long): Unit = {
+    Files.createDirectories(statePath(key).getParent)
+    Files.write(statePath(key), v.toString.getBytes(StandardCharsets.UTF_8))
   }
 
   def ledger: DataFrame =
@@ -79,9 +84,10 @@ class FlightIngest(spark: SparkSession, root: String) {
     * files there is no stable global row order (Spark splits and
     * lists files in no contractual sequence), so a glob/directory
     * input would make the persisted offset silently ambiguous.
-    * Reject it loudly; multi-file directories are the streaming
-    * path's job ([[graft.streaming.StreamingIngest]] tracks per-FILE
-    * offsets in its checkpoint, which is the correct unit). */
+    * Reject it loudly: a directory that only gains fresh files is the
+    * streaming path's job ([[graft.streaming.StreamingIngest]] tracks
+    * per-FILE progress in its checkpoint, which is the correct unit);
+    * files that grow in place go through [[ingestDirectory]]. */
   private def requireSingleFile(csvPath: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(csvPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -95,9 +101,10 @@ class FlightIngest(spark: SparkSession, root: String) {
     require(files.length == 1,
       s"FlightIngest.ingest requires exactly one CSV file; '$csvPath' resolves to " +
         s"${files.length} files. The row-offset resume contract has no defined " +
-        "order across files — use ingestDirectory (per-file offset state, " +
-        "filename order) or graft.streaming.StreamingIngest for directories " +
-        "(per-file offsets via the stream checkpoint).")
+        "order across files — for a directory that only gains fresh files use " +
+        "graft.streaming.StreamingIngest (per-file exactly-once via its " +
+        "checkpoint); for files that grow in place use ingestDirectory " +
+        "(per-file offset state, file-name order).")
   }
 
   /** Batch commit protocol (VERDICT r3 #3 — the streaming path's
@@ -143,175 +150,58 @@ class FlightIngest(spark: SparkSession, root: String) {
     * grown tail are committed as separate increments in one call. */
   def ingest(csvPath: String): IngestResult = {
     requireSingleFile(csvPath)
-    var total = IngestResult(0, 0, offset)
+    ingestFile(csvPath, None)
+  }
+
+  /** Directory form: every `*.csv` in `dir`, in file-name order, runs
+    * the single-file protocol above under its own state key — offset
+    * resume, intent marker and growth drain are all per file. The
+    * single-file offset contract is never stretched across files (the
+    * ambiguity [[requireSingleFile]] rejects); the ledger, staging and
+    * seq are the shared sinks they already are, so rows duplicated
+    * ACROSS files dedup exactly like rows duplicated across time.
+    * Idempotent: a re-run finds every per-file offset at EOF and
+    * early-exits. New files between runs simply join in (their state
+    * starts at 0). A directory that only ever gains fresh files is
+    * better served by [[graft.streaming.StreamingIngest]] (one drain,
+    * per-file exactly-once through its checkpoint). Returns totals;
+    * `newOffset` is the last file's offset (offsets are per-file
+    * state, not a meaningful sum). */
+  def ingestDirectory(dir: String): IngestResult = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
+      s"ingestDirectory requires a directory; got '$dir'")
+    val files = fs.listStatus(p).toSeq
+      .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".csv"))
+      .sortBy(_.getPath.getName)
+    require(files.nonEmpty, s"no *.csv files under '$dir'")
+    files.foldLeft(IngestResult(0, 0, 0)) { (total, f) =>
+      add(total, ingestFile(f.getPath.toString, Some(fileKey(f.getPath.getName))))
+    }
+  }
+
+  /** Drains one file under the state key `key`: a resumed batch was
+    * pinned to the crashed extent, so the file may hold a tail beyond
+    * it — that tail is committed as a fresh batch in the same call. */
+  private def ingestFile(csvPath: String, key: Option[String]): IngestResult = {
+    var total = IngestResult(0, 0, readOffset(key))
     var again = true
     while (again) {
-      val (r, resumed) = ingestBatch(csvPath)
-      total = IngestResult(total.rowsScanned + r.rowsScanned,
-        total.rowsLoaded + r.rowsLoaded, r.newOffset)
-      // a resumed batch was pinned to the crashed extent; the file may
-      // hold a tail beyond it — drain with a fresh batch
+      val (r, resumed) = ingestBatch(csvPath, key)
+      total = add(total, r)
       again = resumed && r.rowsScanned > 0
     }
     total
   }
 
-  /** Directory form (VERDICT r5 #8): ingest every `*.csv` in `dir`
-    * under per-file state keys. By default FRESH files (offset 0, no
-    * crashed per-file marker — the append-only-directory steady state)
-    * are batched into ONE union scan/dedup/write under one seq
-    * ([[ingestFreshBatchStep]]); files with partial offsets (grown in
-    * place) keep the FULL single-file protocol — offset resume,
-    * intent marker, growth drain — in deterministic FILENAME order,
-    * because only a per-file scan has the row order their resume
-    * contract needs. `batchFreshFiles = false` forces the serial
-    * protocol for everything (bit-identical staging content; only seq
-    * allocation differs). The single-file offset contract is never
-    * stretched across files (the ambiguity [[requireSingleFile]]
-    * rejects); the ledger/staging/seq are the shared sinks they
-    * already are, so rows duplicated ACROSS files dedup exactly like
-    * rows duplicated across time. Idempotent: a re-run finds every
-    * per-file offset at EOF and early-exits. New files between runs
-    * simply join in (their state starts at 0). Returns totals;
-    * `newOffset` is the last batch/file's offset (offsets are
-    * per-file state, not a meaningful sum). */
-  def ingestDirectory(dir: String, batchFreshFiles: Boolean = true): IngestResult = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
-      s"ingestDirectory requires a directory; got '$dir'")
-    def listCsv(): Seq[org.apache.hadoop.fs.FileStatus] = fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".csv"))
-      .sortBy(_.getPath.getName)
-    require(listCsv().nonEmpty, s"no *.csv files under '$dir'")
-    var total = IngestResult(0, 0, 0)
-    def add(r: IngestResult): Unit =
-      total = IngestResult(total.rowsScanned + r.rowsScanned,
-        total.rowsLoaded + r.rowsLoaded, r.newOffset)
-    var batched = Set.empty[String]
-    if (batchFreshFiles) {
-      val (r, names) = ingestFreshBatchStep(listCsv)
-      add(r); batched = names
-    }
-    listCsv().filterNot(f => batched(f.getPath.getName)).foreach { f =>
-      stateKey = Some(fileKey(f))
-      try add(ingest(f.getPath.toString))
-      finally stateKey = None
-    }
-    total
-  }
+  private def add(a: IngestResult, b: IngestResult): IngestResult =
+    IngestResult(a.rowsScanned + b.rowsScanned, a.rowsLoaded + b.rowsLoaded, b.newOffset)
 
-  /** Batched fresh-file fast path (the per-file PARALLEL directory
-    * ingest): every file that is FRESH — offset 0, no per-file intent
-    * marker — joins ONE union scan, one intra-batch dedup, one
-    * ledger anti-join, one staging/ledger write under ONE seq,
-    * then per-file offset commits. Grown files keep the serial
-    * per-file protocol (their row-offset resume needs a per-file row
-    * order that a union scan cannot provide); fresh files need no
-    * resume — their extent is simply "the whole file now" — so N
-    * first loads collapse from 3N jobs to 3 + N tiny fingerprint
-    * probes, and at 1000 files the cluster sees one fat scan instead
-    * of a thousand sequential ones.
-    *
-    * Safety is the single-file marker argument specialized to
-    * offset 0, where recovery needs no bit-identical re-read:
-    *
-    *  - The batch writes a DIRECTORY-level intent marker
-    *    (seq + per-file (key, end, head-fingerprint)) before any data
-    *    write, atomically (temp + rename).
-    *  - Ledger partition `seq` ABSENT on recovery ⇒ the crashed batch
-    *    never logically committed: any orphaned staging partition is
-    *    dropped and the batch simply re-runs over the CURRENT files —
-    *    nothing was ledgered, so nothing can duplicate, and a file
-    *    that grew or was replaced in the crash window is ingested as
-    *    it now stands under a fresh marker.
-    *  - Ledger partition PRESENT ⇒ the batch committed: offsets are
-    *    finalized from the marker, but only for files whose first
-    *    data line still matches the recorded fingerprint — a file
-    *    REPLACED while down stays at offset 0 and is re-ingested as
-    *    fresh (the global ledger dedups any overlap), exactly the
-    *    single-file headHash rule.
-    *
-    * Returns the batch totals plus the names it consumed (the serial
-    * loop skips them). */
-  private def ingestFreshBatchStep(
-      listCsv: () => Seq[org.apache.hadoop.fs.FileStatus])
-      : (IngestResult, Set[String]) = {
-    // recover a crashed batch before looking at per-file state
-    readBatchMarker().foreach { case (seq, entries) =>
-      val byKey = listCsv().map(f => fileKey(f) -> f).toMap
-      if (ledgerPartExists(seq)) {
-        entries.foreach { e =>
-          byKey.get(e.key).foreach { f =>
-            if (extentHeadHash(f.getPath.toString, 0) == e.headHash)
-              writeOffsetOf(e.key, e.end)
-          }
-        }
-      } else dropUncommittedStaging(seq)
-      clearBatchMarker()
-    }
-    val fresh = listCsv().filter { f =>
-      offsetOf(fileKey(f)) == 0L && !perFileMarkerExists(fileKey(f))
-    }
-    if (fresh.isEmpty) return (IngestResult(0, 0, 0), Set.empty)
-    // one distributed line-count pass over ALL fresh files (I-1 batched)
-    val countsByFile = spark.read.text(fresh.map(_.getPath.toString): _*)
-      .groupBy(input_file_name().as("f")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // input_file_name() returns URL-encoded URIs, so decode before
-    // matching on the plain file name — otherwise a name containing a
-    // space/percent-encodable char silently misses the batched count
-    // (and fell back to the serial loop: correct but unbatched)
-    def decodedPath(k: String): String =
-      scala.util.Try(new java.net.URI(k).getPath).getOrElse(k)
-    def dataRows(f: org.apache.hadoop.fs.FileStatus): Long =
-      countsByFile.collectFirst {
-        case (k, v) if decodedPath(k).endsWith("/" + f.getPath.getName) => v
-      }.getOrElse(0L) - 1L
-    val entries = fresh.flatMap { f =>
-      val n = dataRows(f)
-      if (n > 0)
-        Some(f -> BatchEntry(fileKey(f), n,
-          extentHeadHash(f.getPath.toString, 0)))
-      else None
-    }
-    if (entries.isEmpty) return (IngestResult(0, 0, 0), Set.empty)
-    val seq = nextBatchSeq()
-    writeBatchMarker(seq, entries.map(_._2))
-    val raw = spark.read.schema(FlightSchemas.rawCsv)
-      .option("header", true).csv(entries.map(_._1.getPath.toString): _*)
-    // I-10/I-11 over the union: cross-file duplicates collapse exactly
-    // like cross-time duplicates (identical rows share a hash)
-    val hashed = rowHash(raw).dropDuplicates("row_hash")
-    val freshRows = hashed
-      .join(ledger.select("row_hash"), Seq("row_hash"), "left_anti").cache()
-    val freshCount = freshRows.count()
-    if (freshCount > 0) {
-      FlightSchemas.renameToStaging(freshRows.drop("row_hash"))
-        .withColumn("ingest_batch", lit(seq))
-        .write.partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite).parquet(stagingPath)
-      afterStagingWrite()
-      freshRows.select(col("row_hash"))
-        .withColumn("load_timestamp", current_timestamp())
-        .withColumn("ingest_batch", lit(seq))
-        .write.partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite).parquet(ledgerPath)
-      afterLedgerWrite()
-    }
-    freshRows.unpersist()
-    entries.foreach { case (_, e) => writeOffsetOf(e.key, e.end) }
-    clearBatchMarker()
-    (IngestResult(entries.map(_._2.end).sum, freshCount, entries.last._2.end),
-      entries.map(_._1.getPath.getName).toSet)
-  }
-
-  private def ingestBatch(csvPath: String): (IngestResult, Boolean) = {
+  private def ingestBatch(csvPath: String, key: Option[String]): (IngestResult, Boolean) = {
     // I-1: raw line count (includes header, like the reference's rb scan)
     val lineCount = spark.read.text(csvPath).count()
-    var off = offset
+    var off = readOffset(key)
     // I-3: file shrank => new file, reset. PINNED REFERENCE BUG
     // (ingestion.py:41: `if total_lines < offset`): lineCount includes
     // the header while the offset counts data rows, so a file that
@@ -325,7 +215,7 @@ class FlightIngest(spark: SparkSession, root: String) {
       // new file's rows at those positions are different data, so
       // resuming it would commit wrong rows under a committed batch's
       // seq (overwriting its ledger partition). Shrink-reset kills it.
-      clearInflight()
+      clearInflight(key)
     }
     // resume iff an intent marker pins an unfinished extent at OUR
     // offset that FITS the current file; markers from other offsets
@@ -342,18 +232,18 @@ class FlightIngest(spark: SparkSession, root: String) {
     // partition (if any, and only if its ledger partition is absent —
     // i.e. the batch never logically committed) is dropped so the
     // fresh first-load of the replacement cannot double-count.
-    val resume = readInflight().filter { m =>
+    val resume = readInflight(key).filter { m =>
       val fits = m.off == off && m.end > off && m.end <= lineCount - 1
       // legacy (3-field) markers carry no fingerprint — forall passes
       // them on the fits check alone, the pre-fingerprint behavior
       val alive = fits && m.headHash.forall(_ == extentHeadHash(csvPath, m.off))
-      if (fits && !alive) { dropUncommittedStaging(m.seq); clearInflight() }
+      if (fits && !alive) { dropUncommittedStaging(m.seq); clearInflight(key) }
       alive
     }
     val end = resume.map(_.end).getOrElse(lineCount - 1)
     // I-4: early exit
     val rowsToProcess = end - off
-    if (rowsToProcess <= 0) { clearInflight(); return (IngestResult(0, 0, off), false) }
+    if (rowsToProcess <= 0) { clearInflight(key); return (IngestResult(0, 0, off), false) }
     val seq = resume.map(_.seq).getOrElse(nextBatchSeq())
     // on a resume the marker on disk already records exactly this
     // extent — do NOT rewrite it (a crash mid-rewrite would tear the
@@ -361,7 +251,7 @@ class FlightIngest(spark: SparkSession, root: String) {
     // marker then reads as fresh-batch and a new seq would duplicate
     // the extent's rows beside the orphaned partition)
     if (resume.isEmpty)
-      writeInflight(Inflight(seq, off, end, Some(extentHeadHash(csvPath, off))))
+      writeInflight(key, Inflight(seq, off, end, Some(extentHeadHash(csvPath, off))))
 
     // I-5: header-aware resume — skip data rows outside [off, end) in
     // file order. zipWithIndex preserves file order for a single CSV
@@ -398,13 +288,13 @@ class FlightIngest(spark: SparkSession, root: String) {
       val staged = renamed.withColumn("ingest_batch", lit(seq))
         .write.partitionBy("ingest_batch").mode(SaveMode.Overwrite)
       // I-7 replace semantics apply to the SINGLETON contract only: in
-      // directory mode (stateKey set) staging holds other files'
+      // directory mode (key set) staging holds other files'
       // partitions, which a static overwrite would silently wipe — a
       // later file's first load must land beside them, not replace
       // them. Consequence: a file REPLACED in place keeps its old rows
       // under their old seqs (same documented residue as the all-seen
       // shrink reset; V-3 alarms, compaction is the cleanup path).
-      if (off == 0 && stateKey.isEmpty) staged.parquet(stagingPath)
+      if (off == 0 && key.isEmpty) staged.parquet(stagingPath)
       else staged.option("partitionOverwriteMode", "dynamic").parquet(stagingPath)
       afterStagingWrite() // crash-injection seam (no-op in production)
       // I-8: ledger append with load timestamp — as an idempotent
@@ -420,8 +310,8 @@ class FlightIngest(spark: SparkSession, root: String) {
     fresh.unpersist()
     // I-9: offset advances by rows *scanned* (incl. dupes), as in the
     // reference (ingestion.py:126: offset + rows_processed).
-    writeOffset(end)
-    clearInflight()
+    writeOffset(key, end)
+    clearInflight(key)
     (IngestResult(rowsToProcess, freshCount, end), resume.isDefined)
   }
 
@@ -431,61 +321,11 @@ class FlightIngest(spark: SparkSession, root: String) {
   protected def afterStagingWrite(): Unit = ()
   protected def afterLedgerWrite(): Unit = ()
 
-  // ---- per-file + batch state helpers --------------------------------
-
-  private def fileKey(f: org.apache.hadoop.fs.FileStatus): String =
-    f.getPath.getName.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def offsetOf(key: String): Long = {
-    stateKey = Some(key); try offset finally stateKey = None
-  }
-  private def writeOffsetOf(key: String, v: Long): Unit = {
-    stateKey = Some(key); try writeOffset(v) finally stateKey = None
-  }
-  private def perFileMarkerExists(key: String): Boolean = {
-    stateKey = Some(key)
-    try Files.exists(inflightPath) finally stateKey = None
-  }
-
-  /** Directory-batch intent marker: `seq|key=end:headHash|...`. The
-    * `__dirbatch` suffix cannot collide with a per-file key (only
-    * `*.csv` files are listed, so every per-file key ends in a
-    * sanitized ".csv"). Atomic write, like the per-file marker. */
-  private case class BatchEntry(key: String, end: Long, headHash: Long)
-  private def batchMarkerPath =
-    Paths.get(s"$root/state/flight_inflight__dirbatch")
-
-  private def readBatchMarker(): Option[(Long, Seq[BatchEntry])] =
-    if (!Files.exists(batchMarkerPath)) None
-    else try {
-      val parts = new String(Files.readAllBytes(batchMarkerPath),
-        StandardCharsets.UTF_8).trim.split('|')
-      val es = parts.tail.toSeq.map { e =>
-        val Array(k, rest) = e.split('=')
-        val Array(end, h) = rest.split(':')
-        BatchEntry(k, end.toLong, h.toLong)
-      }
-      if (es.isEmpty) None else Some(parts.head.toLong -> es)
-    } catch { case _: RuntimeException => None }
-
-  private def writeBatchMarker(seq: Long, es: Seq[BatchEntry]): Unit = {
-    Files.createDirectories(batchMarkerPath.getParent)
-    val body = (seq.toString +: es.map(e => s"${e.key}=${e.end}:${e.headHash}"))
-      .mkString("|")
-    val tmp = batchMarkerPath.resolveSibling(
-      batchMarkerPath.getFileName.toString + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, batchMarkerPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def clearBatchMarker(): Unit = Files.deleteIfExists(batchMarkerPath)
-
-  private def ledgerPartExists(seq: Long): Boolean = {
-    val part = new org.apache.hadoop.fs.Path(s"$ledgerPath/ingest_batch=$seq")
-    part.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(part)
-  }
+  /** Per-file state key: the URL-encoded file name. Injective (no two
+    * names share a key, so no file can resume at another's offset), and
+    * names made only of `[A-Za-z0-9._*-]` map to themselves. */
+  private def fileKey(name: String): String =
+    java.net.URLEncoder.encode(name, StandardCharsets.UTF_8)
 
   // ---- intent-marker state -------------------------------------------
 
@@ -532,9 +372,9 @@ class FlightIngest(spark: SparkSession, root: String) {
       fs.delete(stagingPart, true)
   }
 
-  private def readInflight(): Option[Inflight] =
-    if (!Files.exists(inflightPath)) None
-    else new String(Files.readAllBytes(inflightPath), StandardCharsets.UTF_8)
+  private def readInflight(key: Option[String]): Option[Inflight] =
+    if (!Files.exists(inflightPath(key))) None
+    else new String(Files.readAllBytes(inflightPath(key)), StandardCharsets.UTF_8)
       .trim.split(':') match {
         case Array(s, o, e, h) =>
           Some(Inflight(s.toLong, o.toLong, e.toLong, Some(h.toLong)))
@@ -546,17 +386,19 @@ class FlightIngest(spark: SparkSession, root: String) {
   /** Atomic via temp-file + rename: a crash mid-write must never leave
     * a torn marker (it would read as "no marker" and a retry would
     * re-run the extent under a NEW seq beside the old partitions). */
-  private def writeInflight(m: Inflight): Unit = {
-    Files.createDirectories(inflightPath.getParent)
-    val tmp = inflightPath.resolveSibling(inflightPath.getFileName.toString + ".tmp")
+  private def writeInflight(key: Option[String], m: Inflight): Unit = {
+    val path = inflightPath(key)
+    Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
     Files.write(tmp,
       s"${m.seq}:${m.off}:${m.end}:${m.headHash.getOrElse(0L)}".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, inflightPath,
+    Files.move(tmp, path,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def clearInflight(): Unit = Files.deleteIfExists(inflightPath)
+  private def clearInflight(key: Option[String]): Unit =
+    Files.deleteIfExists(inflightPath(key))
 
   /** Next batch sequence: one past the highest `ingest_batch=` partition
     * either sink has ever committed (ledger partitions are never

@@ -12,8 +12,7 @@ import org.apache.spark.sql.types._
   * expressions with exact DuckDB twins, so the assignments themselves
   * sit under the oracle.
   */
-object Assembly {
-  type Q = (SparkSession, String) => DataFrame
+object Assembly extends graft.QueryModule {
 
   /** Deterministic, content-independent train/val/test assignment:
     * bucket on the first hex nibble of md5(doc_id || salt) —

@@ -34,8 +34,7 @@ import org.apache.spark.sql.types._
   * own runtime shuffle-side bloom (AQE) or a semi-join on a bucketed
   * layout takes over; the cutover is the caller's call, the math is
   * the same. */
-object BloomJoin {
-  type Q = (SparkSession, String) => DataFrame
+object BloomJoin extends graft.QueryModule {
 
   val numHashes = 5
   val defaultBits = 1 << 18

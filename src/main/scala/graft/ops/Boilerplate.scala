@@ -35,8 +35,7 @@ import org.apache.spark.sql.functions._
   *     an artifact (like [[NearDupIndexStore]]) and reuse it across
   *     ingest rounds.
   */
-object Boilerplate {
-  type Q = (SparkSession, String) => DataFrame
+object Boilerplate extends graft.QueryModule {
 
   /** Tokens per block. 8 is small enough that planted near-dup
     * families share whole blocks, large enough that cross-doc chance

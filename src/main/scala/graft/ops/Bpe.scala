@@ -38,8 +38,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * TextAnalysis expression. Cost is O(len x merges) per row with
   * small constants; a 100 TB run spends it inside the same scan that
   * already computes quality/langid features. */
-object Bpe {
-  type Q = (SparkSession, String) => DataFrame
+object Bpe extends graft.QueryModule {
 
   /** Learned merges, highest-frequency first (rank order = apply order). */
   val merges: Seq[(String, String)] = Seq(

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * only writer that records bucketing metadata; a plain parquet path
   * loses it). `spark.sql.sources.bucketing.enabled` is on by default.
   */
-object Bucketing {
+object Bucketing extends graft.QueryModule {
   /** Persist a DataFrame as a bucketed, sorted managed table. Drops a
     * prior table AND its location (a stale location without a catalog
     * entry — e.g. after a fresh session against an old warehouse dir —
@@ -101,8 +101,6 @@ object Bucketing {
     * write is paid once per (JVM, corpus) in the store build —
     * exactly the amortization a 100 TB fact⋈fact workload buys with a
     * bucketed layout. */
-  type Q = (SparkSession, String) => DataFrame
-
   val queries: Map[String, Q] = Map(
     "q198_bucketed_join" -> ((s, d) => colocatedOrderJoin(s, d)),
     "q199_bucketed_agg" -> ((s, d) => bucketedOrderAgg(s, d)),

@@ -49,8 +49,7 @@ import org.apache.spark.sql.types._
   * `mergeRounds` algebra. [[graft.streaming.StreamingCdc]] is the same
   * store fed by `foreachBatch` (the 13th pipeline).
   */
-object Cdc {
-  type Q = (SparkSession, String) => DataFrame
+object Cdc extends graft.QueryModule {
 
   /** One surviving row per key: the max-(ts, seq) row, tombstones
     * included. Everything that is not a key column rides the payload

@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
   * oracle twin replays the whole composition in DuckDB, recursive
   * closure included, so the verdict column itself is hash-checked —
   * not just its ingredients. */
-object Curation {
-  type Q = (SparkSession, String) => DataFrame
+object Curation extends graft.QueryModule {
 
   val corpusFilter: Q = (s, d) => {
     // ONE projection computes the content hash, quality gate, and

@@ -38,8 +38,7 @@ import org.apache.spark.sql.types._
   * No global cross join exists on any path, and the bucket shuffles
   * carry ids only (never shingle arrays or vectors).
   */
-object Dedup {
-  type Q = (SparkSession, String) => DataFrame
+object Dedup extends graft.QueryModule {
 
   /** Deterministic membership cap per LSH bucket (see class doc #2). */
   val bucketCap = 1000

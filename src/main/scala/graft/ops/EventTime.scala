@@ -17,8 +17,7 @@ import org.apache.spark.sql.types._
   * representation stability) and all value sums go through the exact
   * decimal convention in [[Qx]].
   */
-object EventTime {
-  type Q = (SparkSession, String) => DataFrame
+object EventTime extends graft.QueryModule {
 
   private val tsFmt = "yyyy-MM-dd HH:mm:ss"
 

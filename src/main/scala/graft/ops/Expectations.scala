@@ -20,8 +20,7 @@ import org.apache.spark.sql.types._
   * shape, the FK checks are id-only anti-joins (broadcast when the
   * parent side is small; shuffle otherwise — Catalyst's call). The
   * final UNION is over one-row frames. */
-object Expectations {
-  type Q = (SparkSession, String) => DataFrame
+object Expectations extends graft.QueryModule {
 
   private def checkRow(check: String, table: String,
                        violations: org.apache.spark.sql.Column) =

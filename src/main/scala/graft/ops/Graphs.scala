@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * per step instead of compounding five joins into one tree (the
   * q36b closure discipline).
   */
-object Graphs {
-  type Q = (SparkSession, String) => DataFrame
+object Graphs extends graft.QueryModule {
 
   val iterations = 5
   /** Total rank mass in integer units. */

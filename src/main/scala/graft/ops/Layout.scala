@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
   * exact DuckDB oracle (the house no-transcendentals rule; bit ops
   * would also have worked but `div`/`%` spell identically in both).
   */
-object Layout {
-  type Q = (SparkSession, String) => DataFrame
+object Layout extends graft.QueryModule {
 
   /** Bits kept per dimension (values are clamped to [0, 2^bits)): 16
     * bits is exact for both testdata dimensions and for a production

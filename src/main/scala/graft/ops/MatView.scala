@@ -33,8 +33,7 @@ import org.apache.spark.sql.functions._
   * round, merge-on-read, auto-compaction folding old rounds —
   * read-equivalent because the merge is the aggregates' own
   * semilattice/monoid algebra. */
-object MatView {
-  type Q = (SparkSession, String) => DataFrame
+object MatView extends graft.QueryModule {
 
   /** Partial aggregate state of a document batch: one row per
     * (source, lang) — count/sum/min/max over n_chars. */

@@ -26,8 +26,7 @@ import org.apache.spark.sql.types._
   * computing histograms — so q38 exercises an actual
   * bytes→codec→features path end-to-end, executor-side.
   */
-object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
+object Multimodal extends graft.QueryModule {
 
   /** A media row: bytes + metadata, as a training pipeline would stage
     * them after crawling (content in the row, not a URI, so the scan

@@ -37,8 +37,7 @@ import org.apache.spark.sql.types.{DateType, DecimalType, LongType}
   * plan shapes (dynamicpruningexpression present; files read < files
   * in store).
   */
-object PartitionedFacts {
-  type Q = (SparkSession, String) => DataFrame
+object PartitionedFacts extends graft.QueryModule {
 
   /** Exact cents for a 2-decimal double price (the house q109/q178
     * cast chain). */

@@ -49,8 +49,7 @@ import org.apache.spark.sql.types._
   * DOES tokenize the docs it ingests — that is the batch index-build
   * job, paid once per document, not per query.
   */
-object PostingsIndex {
-  type Q = (SparkSession, String) => DataFrame
+object PostingsIndex extends graft.QueryModule {
 
   /** Postings partition fan-out under each round. */
   val termBuckets = 16

@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * histogram then folds |classes| rows, and everything downstream of
   * the first aggregate is domain-bounded. The DuckDB twin deliberately
   * runs the rival one-subquery-per-level UNION ALL spelling. */
-object Privacy {
-  type Q = (SparkSession, String) => DataFrame
+object Privacy extends graft.QueryModule {
 
   /** Classes smaller than this are flagged risky (the conventional
     * k = 5 release bar). */

@@ -34,8 +34,7 @@ import org.apache.spark.sql.types.LongType
   * data skew, the same hazard class as any hash join; the id-only
   * projection below keeps a hot bucket's rows skinny.
   */
-object RangeJoin {
-  type Q = (SparkSession, String) => DataFrame
+object RangeJoin extends graft.QueryModule {
 
   /** Exact floor division for possibly-negative longs: `div`
     * truncates toward zero, but bucket arithmetic needs the floor

@@ -30,8 +30,7 @@ import org.apache.spark.sql.types._
   * the same exchange. valid_to is an open-right bound (NULL = still
   * current) so interval containment is `from <= ts AND (to IS NULL OR
   * ts < to)` — half-open, adjacent versions never overlap. */
-object Scd {
-  type Q = (SparkSession, String) => DataFrame
+object Scd extends graft.QueryModule {
 
   /** Change-point-compress timestamped snapshots into SCD2 history.
     *

@@ -28,8 +28,7 @@ import org.apache.spark.sql.types._
   * and quantized to DECIMAL(10,6)->DOUBLE so ordering ties resolve
   * identically across engines (see Qx).
   */
-object Similarity {
-  type Q = (SparkSession, String) => DataFrame
+object Similarity extends graft.QueryModule {
 
   /** Native codegen dot product (see [[graft.functions.VecDot]]);
     * same sequential double summation as the higher-order-function

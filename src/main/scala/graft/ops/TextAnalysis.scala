@@ -19,8 +19,7 @@ import org.apache.spark.sql.types._
   * RE2 agree; ratios are int/int divisions (bit-identical across
   * engines, no rounding step needed).
   */
-object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
+object TextAnalysis extends graft.QueryModule {
 
   /** Whitespace tokenization of trimmed, lowercased text. */
   def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")

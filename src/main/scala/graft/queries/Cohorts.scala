@@ -16,8 +16,7 @@ import org.apache.spark.sql.types.DateType
   * days) and even those run through [[Stats.rangeShards]]'s two-phase
   * pass, never a single reducer.
   */
-object Cohorts {
-  type Q = (SparkSession, String) => DataFrame
+object Cohorts extends graft.QueryModule {
 
   /** q152 — FIRST-TOUCH weekly retention, [[graft.ops.EventTime]]
     * q78's complement: q78 anchors cohorts on the explicit `signup`

@@ -19,10 +19,8 @@ import org.apache.spark.sql.types._
   * dumped parquet is deterministic (the sort is eliminated by
   * Catalyst's EliminateSorts under Bench's count()).
   */
-object Core {
+object Core extends graft.QueryModule {
   import Qx._
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** K-1-shaped pricing summary (TPC-H Q1 analog): filter + grouped
     * sums/averages/count with exact decimal arithmetic. */

@@ -31,10 +31,8 @@ import org.apache.spark.sql.types._
   * grid) or run the [[Stats.rangeShards]] two-phase prefix (q163,
   * q164) — the bench stays free of `WindowExec: No Partition Defined`.
   */
-object Drift {
+object Drift extends graft.QueryModule {
   import Qx._
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val D38 = DecimalType(38, 0)
 

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * TitleCaseSpec/CleaningSpec instead. Oracle-facing string keys use
   * lower(trim(...)) which both engines define identically.
   */
-object Flights {
-  type Q = (SparkSession, String) => DataFrame
+object Flights extends graft.QueryModule {
+  override def fixtureDriven: Boolean = true
 
   val fixturePath = "/root/repo/src/test/resources/flights_small.csv"
   val appendFixturePath = "/root/repo/src/test/resources/flights_append.csv"

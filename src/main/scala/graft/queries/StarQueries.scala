@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * incremental-ingest path including the hash ledger, intra-batch
   * dedup, dim upserts and the partitioned fact write.
   */
-object StarQueries {
-  type Q = (SparkSession, String) => DataFrame
+object StarQueries extends graft.QueryModule {
+  override def fixtureDriven: Boolean = true
 
   private val lock = new Object
   @volatile private var builtRoot: String = _

@@ -25,10 +25,8 @@ import org.apache.spark.sql.types._
   * fact-table shuffle anywhere (the second pass of the outlier query
   * joins a BROADCAST stats table back onto the scan).
   */
-object Stats {
+object Stats extends graft.QueryModule {
   import Qx._
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Exactness envelope guard for the moment sums (same contract as
     * [[Qx.guarded]]): decimal totals must round-trip through DOUBLE
@@ -766,8 +764,8 @@ object Stats {
     * through DECIMAL(38,0) cross terms — n·Σx² and (Σx)² reach ~10²⁷
     * at SF100, far past int64 — with one integer division at the end
     * whose quotient is bounded by the value range (≤ 4·10¹², so the
-    * long-typed `div` result cannot wrap; ProbeDecimalDiv pins that
-    * both engines truncate toward zero).
+    * long-typed `div` result cannot wrap; both engines truncate
+    * toward zero).
     *
     * Scale shape: posexplode fans each vector into |dim| skinny rows
     * that partial-aggregate map-side onto |dim| groups before the

@@ -334,113 +334,68 @@ class IngestSpec extends SparkTestBase {
     // per-file state key, so b.csv's first load replaced the whole
     // staging table (a.csv's partition included)
     val (ing, _, dir) = disjointDir()
-    val r = ing.ingestDirectory(dir, batchFreshFiles = false)
+    val r = ing.ingestDirectory(dir)
     assert(r.rowsScanned == 67 && r.rowsLoaded == 64)
     assert(ing.staging.count() == 64, "a.csv's staging partition was wiped")
     assert(ing.ledger.count() == 64)
   }
 
-  test("batched directory ingest: one union scan, one seq, same rows as serial") {
-    val (ing, root, dir) = disjointDir()
-    val r = ing.ingestDirectory(dir)
-    assert(r.rowsScanned == 67 && r.rowsLoaded == 64)
-    assert(ing.staging.count() == 64 && ing.ledger.count() == 64)
-    // the whole batch committed under ONE seq partition
-    val parts = new java.io.File(ing.stagingPath).listFiles()
-      .filter(_.getName.startsWith("ingest_batch=")).map(_.getName).toSeq
-    assert(parts == Seq("ingest_batch=0"))
-    // per-file offsets at EOF; idempotent re-run scans nothing
-    assert(Files.exists(Paths.get(s"$root/state/flight_csv_offset__a.csv")))
-    assert(Files.exists(Paths.get(s"$root/state/flight_csv_offset__b.csv")))
-    val r2 = ing.ingestDirectory(dir)
-    assert(r2.rowsScanned == 0 && r2.rowsLoaded == 0)
-    assert(ing.staging.count() == 64)
-    // a file growing afterwards drains via the serial per-file path
-    Files.copy(Paths.get(resource("flights_append.csv")),
-      Paths.get(s"$dir/a.csv"), StandardCopyOption.REPLACE_EXISTING)
-    val r3 = ing.ingestDirectory(dir)
-    assert(r3.rowsScanned == 18 && r3.rowsLoaded == 0) // tail == b.csv rows
-    assert(ing.staging.count() == 64)
-  }
+  /** An instance that throws at the `n`-th call of one crash seam
+    * (`n` = 1 is the first file that stages rows, 2 the second). */
+  private def crashingAt(root: String, seam: String, n: Int): FlightIngest =
+    new FlightIngest(spark, root) {
+      private var calls = 0
+      private def hit(s: String): Unit = if (s == seam) {
+        calls += 1
+        if (calls == n) throw new RuntimeException(s"injected crash at $seam #$n")
+      }
+      override protected def afterStagingWrite(): Unit = hit("afterStagingWrite")
+      override protected def afterLedgerWrite(): Unit = hit("afterLedgerWrite")
+    }
 
-  test("batched directory ingest: a file name with spaces stays on the batched path") {
-    // input_file_name() returns URL-encoded URIs ("a%20b.csv"); before
-    // the decode fix the count lookup missed, the file silently fell
-    // back to the serial loop, and the batch split into two seqs
+  // Directory mode commits a first load with a DYNAMIC partition
+  // overwrite (other files' partitions live beside it), which the
+  // single-file crash specs above never exercise.
+  for (seam <- Seq("afterStagingWrite", "afterLedgerWrite");
+       (file, n) <- Seq("a.csv" -> 1, "b.csv" -> 2))
+    test(s"serial directory ingest: crash at $seam of $file converges without duplicates") {
+      val (_, root, dir) = disjointDir()
+      intercept[RuntimeException](crashingAt(root, seam, n).ingestDirectory(dir))
+      val ing = new FlightIngest(spark, root)
+      ing.ingestDirectory(dir)
+      assert(ing.staging.count() == 64 && ing.ledger.count() == 64)
+      assert(ing.staging.distinct().count() == 64, "the retry staged a row twice")
+      def offsetOf(f: String): Long = new String(Files.readAllBytes(
+        Paths.get(s"$root/state/flight_csv_offset__$f"))).trim.toLong
+      assert(offsetOf("a.csv") == 49 && offsetOf("b.csv") == 18)
+      val r = ing.ingestDirectory(dir)
+      assert(r.rowsScanned == 0 && ing.staging.count() == 64)
+    }
+
+  test("directory ingest: file names that sanitize alike keep separate offsets") {
+    // `a b.csv` and `a_b.csv` used to share one state key (every char
+    // outside [A-Za-z0-9._-] became `_`): a_b.csv then resumed at
+    // a b.csv's offset and silently skipped the rows in between
     val root = tmpDir("ingest")
     val dir = s"$root/csvdir"
     Files.createDirectories(Paths.get(dir))
     Files.copy(Paths.get(resource("flights_small.csv")), Paths.get(s"$dir/a b.csv"))
-    val append = Files.readAllLines(Paths.get(resource("flights_append.csv")))
-    val tail = new java.util.ArrayList[String]()
-    tail.add(append.get(0))
-    for (i <- 50 until append.size) tail.add(append.get(i))
-    Files.write(Paths.get(s"$dir/c.csv"), tail)
+    // a_b.csv: 64 rows disjoint from a b.csv's 49 (first field prefixed)
+    val distinct = new java.util.ArrayList[String](new java.util.LinkedHashSet[String](
+      Files.readAllLines(Paths.get(resource("flights_append.csv")))))
+    val other = new java.util.ArrayList[String](distinct)
+    for (i <- 1 until other.size) other.set(i, "zz-" + other.get(i))
+    def writeRows(n: Int): Unit =
+      Files.write(Paths.get(s"$dir/a_b.csv"), other.subList(0, n + 1))
+    writeRows(10)
     val ing = new FlightIngest(spark, root)
-    val r = ing.ingestDirectory(dir)
-    assert(r.rowsScanned == 67 && r.rowsLoaded == 64)
-    // BOTH files committed under the one batched seq — the space-named
-    // file did not leak to the serial loop's own seq
-    val parts = new java.io.File(ing.stagingPath).listFiles()
-      .filter(_.getName.startsWith("ingest_batch=")).map(_.getName).toSeq
-    assert(parts == Seq("ingest_batch=0"), s"batch split: $parts")
-    val r2 = ing.ingestDirectory(dir)
-    assert(r2.rowsScanned == 0 && r2.rowsLoaded == 0)
-  }
-
-  test("batched directory ingest: crash before ledger redoes the batch without duplicates") {
-    val (_, root, dir) = disjointDir()
-    val crashing = new FlightIngest(spark, root) {
-      override protected def afterStagingWrite(): Unit =
-        throw new RuntimeException("injected crash")
-    }
-    intercept[RuntimeException](crashing.ingestDirectory(dir))
-    // marker present, ledger partition absent => orphaned staging
-    assert(Files.exists(Paths.get(s"$root/state/flight_inflight__dirbatch")))
-    val ing = new FlightIngest(spark, root)
-    val r = ing.ingestDirectory(dir)
-    assert(r.rowsScanned == 67 && r.rowsLoaded == 64)
-    assert(ing.staging.count() == 64 && ing.ledger.count() == 64,
-      "orphaned staging partition double-counts the crashed batch")
-    assert(!Files.exists(Paths.get(s"$root/state/flight_inflight__dirbatch")))
-  }
-
-  test("batched directory ingest: crash after ledger finalizes offsets without rescanning") {
-    val (_, root, dir) = disjointDir()
-    val crashing = new FlightIngest(spark, root) {
-      override protected def afterLedgerWrite(): Unit =
-        throw new RuntimeException("injected crash")
-    }
-    intercept[RuntimeException](crashing.ingestDirectory(dir))
-    val ing = new FlightIngest(spark, root)
-    val r = ing.ingestDirectory(dir)
-    // the batch had logically committed: recovery only finalizes
-    // per-file offsets from the marker — nothing is rescanned
-    assert(r.rowsScanned == 0 && r.rowsLoaded == 0)
-    assert(ing.staging.count() == 64 && ing.ledger.count() == 64)
-    val r2 = ing.ingestDirectory(dir)
-    assert(r2.rowsScanned == 0 && ing.staging.count() == 64)
-  }
-
-  test("batched directory ingest: file replaced during crash window re-ingests fresh") {
-    val (_, root, dir) = disjointDir()
-    val crashing = new FlightIngest(spark, root) {
-      override protected def afterLedgerWrite(): Unit =
-        throw new RuntimeException("injected crash")
-    }
-    intercept[RuntimeException](crashing.ingestDirectory(dir))
-    // replace b.csv while "down": different first data line
-    val b = Files.readAllLines(Paths.get(s"$dir/b.csv"))
-    val mut = new java.util.ArrayList[String](b)
-    mut.set(1, mut.get(1).replaceFirst("^", "zz-"))
-    Files.write(Paths.get(s"$dir/b.csv"), mut)
-    val ing = new FlightIngest(spark, root)
-    val r = ing.ingestDirectory(dir)
-    // a.csv's offset finalizes from the marker; b.csv's fingerprint
-    // mismatches so it stays fresh and re-ingests — the one mutated
-    // row is new, the other 17 dedup against the committed ledger
-    assert(r.rowsScanned == 18 && r.rowsLoaded == 1)
-    assert(ing.staging.count() == 65 && ing.ledger.count() == 65)
+    ing.ingestDirectory(dir)
+    assert(ing.staging.count() == 49 + 10)
+    // a_b.csv grows in place past a b.csv's row count
+    writeRows(64)
+    ing.ingestDirectory(dir)
+    assert(ing.staging.count() == 49 + 64, "a_b.csv resumed at another file's offset")
+    assert(ing.ledger.count() == 49 + 64)
   }
 
   test("multi-file directory input is rejected loudly (offset order undefined)") {
